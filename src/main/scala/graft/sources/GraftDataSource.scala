@@ -1625,7 +1625,7 @@ private[sources] object GraftAggScan {
     val live = manifest.dataFiles.filter(e => e.rows > e.deletes)
     live.groupBy(keyOf).toSeq
       // deterministic plan output (Spark re-sorts as needed)
-      .sortBy(_._1.map(_.map(_.toString).getOrElse("")).mkString(" "))
+      .sortBy(_._1.map(_.map(_.toString).getOrElse("")).mkString("\u0000"))
       .map { case (key, files) =>
         val cells = key.zip(fds).map {
           case (scala.None, _) => null

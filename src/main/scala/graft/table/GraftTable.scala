@@ -40,7 +40,7 @@ final case class TableConfig(
     driverEventBatchRows: Long = 100000,
     /** auto index merge (M11): consolidate once this many index files
      *  accumulate (reference `index_merge_config.rs:9-31` merges at
-     *  >= 16 under final size). Delete resolution joins against every
+     *  >= 16 under final size). Delete resolution reads every unranged
      *  index file, so unbounded growth would slow each publish. */
     indexMergeFileCountThreshold: Int = 16,
     /** read path: apply DVs via a broadcast of roaring-serialized
@@ -107,9 +107,11 @@ final case class TableConfig(
  * the cluster; the driver holds only the bounded mem-slice
  * (<= memSliceSize rows), roaring-compressed DV bitmaps (pruned by
  * compaction) and the manifest. Delete resolution never scans data
- * files — it joins the (small, broadcast) delete-key set against the
- * persisted key index, mirroring the reference's hash-index point
- * lookup (`persisted_bucket_hash_map.rs:276`).
+ * files — it probes the persisted key index with the delete keys'
+ * xxhash64 set (computed on the driver, pruning hash-ranged index
+ * files by coverage) and matches keys exactly on the driver, one Spark
+ * job per commit, mirroring the reference's hash-index point lookup
+ * (`persisted_bucket_hash_map.rs:276`).
  */
 final class GraftTable private (
     val spark: SparkSession,
@@ -176,6 +178,10 @@ final class GraftTable private (
   /** deletes targeting already-flushed rows; resolved set-based at
    *  publish (reference keeps a deletion log, `snapshot.rs:1000`). */
   private val pendingDeletes = mutable.ArrayBuffer[(Seq[Any], Long)]()
+  /** WAL segment -> its max event LSN, for every segment this handle
+   *  appended or replayed; publish truncates from it without reading
+   *  segments back. */
+  private val walSegments = mutable.HashMap[String, Long]()
   /** DV delta not yet persisted to a dv parquet sidecar. */
   private val newDvPairs = mutable.ArrayBuffer[(String, Long)]()
   /** data-file basename -> deleted row positions (all committed DVs). */
@@ -290,7 +296,8 @@ final class GraftTable private (
   /** Apply a batch of CDC events in order; publish a new manifest
    *  version. Returns the commit LSN after the batch. */
   def apply(events: Seq[CdcEvent]): Long = synchronized {
-    if (config.walEnabled && events.nonEmpty) Wal.append(root, schemaVar, events)
+    if (config.walEnabled && events.nonEmpty)
+      walSegments += Wal.append(root, schemaVar, events)
     Metrics.counter("graft.rows_ingested", root, events.count {
       case _: Append | _: Delete => true
       case _ => false
@@ -321,7 +328,8 @@ final class GraftTable private (
       chunkRows: Int = 65536): Long = synchronized {
     streamedApplies += 1
     events.grouped(chunkRows).foreach { chunk =>
-      if (config.walEnabled && chunk.nonEmpty) Wal.append(root, schemaVar, chunk)
+      if (config.walEnabled && chunk.nonEmpty)
+        walSegments += Wal.append(root, schemaVar, chunk)
       processEvents(chunk)
     }
     publish()
@@ -1114,26 +1122,14 @@ final class GraftTable private (
     })
 
   /** Driver-side evaluator of the storage bucket function —
-   *  pmod(xxhash64(key cols), n) — through the SAME Catalyst expression
-   *  the DataFrame-side `bucketExpr` compiles to (`XxHash64`, seed 42,
-   *  over the key columns' actual types), so a driver-flushed row lands
-   *  in exactly the bucket the scan's KeyGroupedPartitioning reports.
-   *  Key columns are never remapped, so logical positions are exact. */
+   *  pmod(xxhash64(key cols), n) — on the shared `keyHashEval`, so a
+   *  driver-flushed row lands in exactly the bucket the scan's
+   *  KeyGroupedPartitioning reports. Key columns are never remapped, so
+   *  logical positions are exact. */
   private[graft] def rowBucketEval(n: Long): Row => Long = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
     val kIdxs = keyCols.map(schemaVar.fieldIndex)
-    val fields = kIdxs.map(schemaVar.fields(_))
-    val refs = fields.zipWithIndex.map { case (f, j) =>
-      BoundReference(j, f.dataType, f.nullable)
-        : org.apache.spark.sql.catalyst.expressions.Expression }
-    val hash = XxHash64(refs, 42L)
-    val convs = fields.map(f => org.apache.spark.sql.catalyst
-      .CatalystTypeConverters.createToCatalystConverter(f.dataType))
-    (r: Row) => {
-      val ir = org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-        kIdxs.indices.map(j => convs(j)(r.get(kIdxs(j)))))
-      java.lang.Math.floorMod(hash.eval(ir).asInstanceOf[Long], n)
-    }
+    val hash = keyHashEval(kIdxs.map(schemaVar.fields(_)))
+    (r: Row) => java.lang.Math.floorMod(hash(kIdxs.map(r.get)), n)
   }
 
   /** Deterministic chunking for driver-path writes: when the table
@@ -1253,6 +1249,13 @@ final class GraftTable private (
     StructField("_file", StringType) :+ StructField("_pos", LongType) :+
     StructField("_lsn", LongType))
 
+  /** Read index files under the pinned `indexSchema`: no footer
+   *  schema-inference job, and a ranged file's extra `_kh` column is
+   *  simply not read. Every index read goes through here. */
+  private def readIndex(files: Seq[IndexFileEntry]): DataFrame =
+    spark.read.schema(indexSchema)
+      .parquet(files.map(e => s"$root/index/${e.path}"): _*)
+
   /** Build a persisted key index (key cols, _file, _pos) for the given
    *  data files by reading them back with metadata row indexes — the
    *  Spark-native `GlobalIndex` (`persisted_bucket_hash_map.rs:43`).
@@ -1277,7 +1280,7 @@ final class GraftTable private (
   }
 
   // =====================================================================
-  // Delete resolution: delete-key set |><| key index -> DV positions.
+  // Delete resolution: delete keys -> key index rows -> DV positions.
   // =====================================================================
 
   /** (index files probed, index files total) of the last delete
@@ -1293,38 +1296,37 @@ final class GraftTable private (
     // one delete kills exactly ONE row — the newest live row of its key
     // appended strictly before it (the flushed analogue of stackPop; an
     // upsert's delete+append share an LSN and must not self-delete).
-    // The cluster narrows the index to rows whose key has a pending
-    // delete; the driver replays the pops in LSN order — candidate count
-    // is bounded by (#delete keys x key dup factor), never table size.
-    val keySchema = StructType(keyFields)
-    val keyDF = spark.createDataFrame(
-      due.map(d => Row.fromSeq(d._1)).distinct.asJava, keySchema)
-    // bucket pruning: hash-ranged (merged) index files are probed only
-    // when they can cover a due key's xxhash64 — a small delete set on
-    // a big table reads a handful of index buckets, not the whole
-    // index (the same coverage map the DSv2 point lookup uses)
-    val probeFiles =
-      if (!indexFiles.exists(_.khRange.size == 2)) indexFiles.toSeq
-      else {
-        val hashes = keyDF.select(xxhash64(
-            keyFields.map(f => col(f.name)): _*))
-          .collect().map(_.getLong(0)).toSet
-        indexFiles.toSeq.filter(e => hashes.exists(e.coversHash))
-      }
+    // The due keys' xxhash64 (seed 42) is evaluated on the driver by
+    // the same Catalyst expression a Spark job computes over the index
+    // (`keyHashEval`). The hashes pick the probe files — a hash-ranged
+    // (merged) index file is read only when its khRange covers a due
+    // key, so a small delete set on a big table reads a handful of
+    // index buckets (the coverage map the DSv2 point lookup uses) — and
+    // filter the index scan to rows whose key hashes into the set. The
+    // exact key match runs on the driver over those candidates, which
+    // then replays the pops in LSN order: resolution is ONE Spark job,
+    // and the candidate count is bounded by (#delete keys x key dup
+    // factor + hash collisions), never table size.
+    val keyHash = keyHashEval(keyFields)
+    val hashes = due.iterator.map(_._1).distinct.map(keyHash).toSet
+    val probeFiles = indexFiles.toSeq.filter(e => hashes.exists(e.coversHash))
     lastDeleteProbe = (probeFiles.size, indexFiles.size)
     if (probeFiles.isEmpty) return
-    val idx = spark.read.parquet(
-      probeFiles.map(e => s"$root/index/${e.path}"): _*)
-    val nk = keyFields.length
-    val cands = idx.join(broadcast(keyDF), keyFields.map(_.name).toSeq)
-      .select(keyFields.map(f => col(f.name)) :+
-        col("_lsn") :+ col("_file") :+ col("_pos"): _*)
+    val kcols = keyFields.map(f => col(f.name))
+    val nk = kcols.length
+    val cands = readIndex(probeFiles)
+      .where(xxhash64(kcols: _*).isInCollection(hashes))
+      .select(kcols :+ col("_lsn") :+ col("_file") :+ col("_pos"): _*)
       .collect()
     val byKey = cands.toSeq
       .map(r => KeyVal((0 until nk).map(r.get)) ->
         ((r.getLong(nk), r.getString(nk + 1), r.getLong(nk + 2))))
       .groupMap(_._1)(_._2)
-    due.groupMap(d => KeyVal(d._1))(_._2).foreach { case (k, dlsns) =>
+    // a key with a null component matches nothing: SQL key equality,
+    // as an equi-join on the key columns would give (FullRow identity
+    // admits nullable key columns)
+    due.filterNot(_._1.contains(null))
+      .groupMap(d => KeyVal(d._1))(_._2).foreach { case (k, dlsns) =>
       // newest (lsn, file, pos) first, DEAD ROWS INCLUDED: the delete
       // rule targets the newest row appended before the delete
       // regardless of liveness — if it is already DV'd the delete is a
@@ -1414,8 +1416,7 @@ final class GraftTable private (
     }
     lastDeleteProbe = (probeFiles.size, all.size)
     if (probeFiles.isEmpty) return // all ranged, none cover: deletes miss
-    val idx = spark.read.parquet(
-      probeFiles.map(e => s"$root/index/${e.path}"): _*)
+    val idx = readIndex(probeFiles)
     // live-file filter matches the driver path's fileEntries guard
     val live = spark.sparkContext.broadcast(fileEntries.keySet.toSet)
     val replay = udf((cands: Seq[Row], dlsns: Seq[Long]) => {
@@ -1513,7 +1514,7 @@ final class GraftTable private (
       // truncate at the *flush* LSN: committed-but-unflushed tail rows
       // are durable only in the WAL (reference truncates at the
       // persisted-snapshot LSN for the same reason, wal.rs:750)
-      if (config.walEnabled) Wal.truncate(root, flushLsnVar)
+      if (config.walEnabled) Wal.truncate(root, flushLsnVar, walSegments)
       versionVar
     }
   }}
@@ -1859,7 +1860,7 @@ final class GraftTable private (
       if (!droppedColsVar.contains(p)) droppedColsVar += p)
     dvMap.clear(); dvBroadcast = scala.None
     loadDvState()
-    if (config.walEnabled) Fio.delete(Wal.walDir(root))
+    if (config.walEnabled) dropWal()
     publish()
   }
 
@@ -2468,8 +2469,7 @@ final class GraftTable private (
       // index_merge_config.rs).
       val covered = unranged.flatMap(_.dataFiles).distinct
       val estRows = covered.flatMap(fileEntries.get).map(_.rows).sum
-      val fresh = writeRangedIndex(
-        spark.read.parquet(unranged.map(e => s"$root/index/${e.path}"): _*),
+      val fresh = writeRangedIndex(readIndex(unranged),
         math.max(1L, estRows), covered)
       indexFiles.clear()
       indexFiles ++= ranged ++ fresh
@@ -2487,8 +2487,7 @@ final class GraftTable private (
     if (identity == Identity.None) return
     val parts = mutable.ArrayBuffer[DataFrame]()
     if (indexFiles.nonEmpty) {
-      val old = spark.read
-        .parquet(indexFiles.map(e => s"$root/index/${e.path}").toSeq: _*)
+      val old = readIndex(indexFiles.toSeq)
       parts += (if (victims.isEmpty) old
                 else old.where(!col("_file").isin(victims.toSeq: _*)))
     }
@@ -2501,9 +2500,7 @@ final class GraftTable private (
           lit(additionsLsn).as("_lsn"): _*)
     indexFiles.clear()
     if (parts.nonEmpty)
-      indexFiles ++= writeRangedIndex(
-        parts.map(df => if (df.columns.contains("_kh")) df.drop("_kh") else df)
-          .reduce(_ unionByName _),
+      indexFiles ++= writeRangedIndex(parts.reduce(_ unionByName _),
         fileEntries.values.map(_.rows).sum,
         fileEntries.keys.toSeq)
     // old index files reclaimed by vacuum()
@@ -2517,16 +2514,14 @@ final class GraftTable private (
    *  on xxhash64(key) and records each file's hash coverage in the
    *  manifest — the bucketed-hash-map shape: a point lookup probes
    *  ONE covering file per generation instead of the whole index. */
-  private def writeRangedIndex(df0: DataFrame, estRows: Long,
+  private def writeRangedIndex(df: DataFrame, estRows: Long,
       covered: Seq[String]): Seq[IndexFileEntry] = {
     Fio.mkdirs(s"$root/index")
     val nOut = math.max(1,
       math.ceil(estRows.toDouble / config.rowsPerFile).toInt)
     val tmp = s"$root/tmp/${UUID.randomUUID()}"
     val keyHash = xxhash64(keyFields.map(f => col(f.name)): _*)
-    val unioned = (if (df0.columns.contains("_kh")) df0.drop("_kh") else df0)
-      .withColumn("_kh", keyHash)
-    unioned.repartitionByRange(nOut, col("_kh"))
+    df.withColumn("_kh", keyHash).repartitionByRange(nOut, col("_kh"))
       .write.mode("overwrite").parquet(tmp)
     val outParts = Fio.list(tmp)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
@@ -2548,8 +2543,7 @@ final class GraftTable private (
    *  statless (pruning then stays off for that file — safe). */
   private def khFooterRange(path: String): Option[(Long, Long)] = try {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(path), Fio.hadoopConf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks
@@ -3137,7 +3131,7 @@ final class GraftTable private (
     commitLsnVar = math.max(maxBuffered, 0L) + 1
     flushLsnVar = commitLsnVar
     val v = publish()
-    Fio.delete(Wal.walDir(root))
+    dropWal()
     v
   }
 
@@ -3154,7 +3148,13 @@ final class GraftTable private (
     commitLsnVar = math.max(commitLsnVar, maxBuffered)
     flushLsnVar = math.max(flushLsnVar, maxBuffered)
     loadFiles(files, lsn) // publishes truncate + adopt as one version
+    dropWal()
+  }
+
+  /** Delete the whole WAL; every segment is forgotten with it. */
+  private def dropWal(): Unit = {
     Fio.delete(Wal.walDir(root))
+    walSegments.clear()
   }
 
   /** Highest LSN observable anywhere in live state — committed or
@@ -3338,6 +3338,26 @@ object GraftTable {
   /** Value-semantics wrapper for key column values — the mem-index key
    *  (reference `MemIndex`, `mem_index.rs:38`). */
   final case class KeyVal(values: Seq[Any])
+
+  /** The engine's one driver-side definition of the storage key hash:
+   *  xxhash64 (seed 42) of key values given in `fields` order, as their
+   *  Row-side values. It evaluates the SAME Catalyst `XxHash64` the
+   *  DataFrame `xxhash64(...)` column compiles to, over the fields'
+   *  actual types (values converted through `CatalystTypeConverters`,
+   *  so e.g. a decimal takes its column's scale), so it equals what a
+   *  Spark job computes over the persisted columns: bucket routing,
+   *  index khRange coverage and the delete-resolution hash filter agree
+   *  with the cluster by construction. */
+  private[graft] def keyHashEval(fields: Seq[StructField]): Seq[Any] => Long = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, XxHash64}
+    val hash = XxHash64(fields.zipWithIndex.map { case (f, j) =>
+      BoundReference(j, f.dataType, nullable = true): Expression }, 42L)
+    val convs = fields.map(f =>
+      CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    (vs: Seq[Any]) => hash.eval(InternalRow.fromSeq(
+      vs.lazyZip(convs).map((v, c) => c(v)))).asInstanceOf[Long]
+  }
 
   /** Proxy tables depend only on the partition count and cost expected
    *  O(m^2) murmur3 probes to derive — memoized process-wide so
@@ -3658,7 +3678,9 @@ object GraftTable {
       }
       // replay from the flush LSN: anything beyond it exists only in the
       // WAL; replays below it are idempotent (DV dedup, tail rebuild)
-      val events = Wal.replay(root, m.schema, m.flushLsn).map {
+      val (replayed, segments) = Wal.replay(root, m.schema, m.flushLsn)
+      t.walSegments ++= segments
+      val events = replayed.map {
         case d: Delete => d.copy(key = Wal.coerceKey(d.key, kf))
         case e => e
       }

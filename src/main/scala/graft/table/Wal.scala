@@ -17,6 +17,10 @@ import scala.jdk.CollectionConverters._
  * (reference `storage/wal.rs:423,670,750,778`; recovery semantics
  * `moonlink_backend/tests/test_wal_recovery.rs`).
  *
+ * Truncation never reads a segment back: `append` and `replay` report
+ * each segment's max LSN, the table keeps that segment -> max-LSN map,
+ * and `truncate` decides from the map alone.
+ *
  * Scale note: the WAL only carries the not-yet-committed window (the
  * mem-slice, <= memSliceSize rows per batch), never table data.
  */
@@ -25,7 +29,29 @@ object Wal {
 
   private[table] def walDir(root: String) = s"$root/wal"
 
-  def append(root: String, schema: StructType, events: Seq[CdcEvent]): Unit = {
+  /** An event's LSN for replay and truncation. A `StreamAbort` carries
+   *  none and counts as `Long.MaxValue`: it always replays, and a
+   *  segment holding one is never truncated. Alters publish their
+   *  schema change immediately, so a replayed alter may already be in
+   *  the manifest — the table's alter handling is idempotent. */
+  private def lsnOf(e: CdcEvent): Long = e match {
+    case e: Commit => e.lsn
+    case e: Append => e.lsn
+    case e: Delete => e.lsn
+    case e: AlterAdd => e.lsn
+    case e: AlterDrop => e.lsn
+    case _: StreamAbort => Long.MaxValue
+  }
+
+  /** A segment's truncation watermark: its highest event LSN (-1 when
+   *  empty, never truncated). */
+  private def maxLsnOf(events: Seq[CdcEvent]): Long =
+    events.iterator.map(lsnOf).foldLeft(-1L)(math.max)
+
+  /** Write `events` as the next segment; returns (segment name, its max
+   *  LSN) for the caller's truncation map. */
+  def append(root: String, schema: StructType,
+      events: Seq[CdcEvent]): (String, Long) = {
     Fio.mkdirs(walDir(root))
     val next = Fio.list(walDir(root))
       .flatMap(n => "\\d{9}".r.findFirstIn(n)).map(_.toLong)
@@ -50,45 +76,43 @@ object Wal {
     // segment number must never have its durability record silently
     // dropped (the manifest commit has the same CAS rule) — the losing
     // statement fails before its caller can believe the events durable
-    if (!Fio.writeAtomicCas(f"${walDir(root)}/wal-$next%09d.jsonl",
-        sb.toString))
+    val seg = f"wal-$next%09d.jsonl"
+    if (!Fio.writeAtomicCas(s"${walDir(root)}/$seg", sb.toString))
       throw new java.util.ConcurrentModificationException(
-        f"WAL segment wal-$next%09d of $root was claimed by another " +
+        s"WAL segment $seg of $root was claimed by another " +
           "writer; reload the table and retry the statement")
+    (seg, maxLsnOf(events))
   }
 
   /** Replay events with lsn > committedLsn (plus all transactional
    *  scaffolding: in-flight xact events must be re-staged, reference
-   *  replays in-flight streaming xacts too). */
-  def replay(root: String, schema: StructType, committedLsn: Long): Seq[CdcEvent] = {
+   *  replays in-flight streaming xacts too). Also returns every
+   *  segment's max LSN — replay already reads them all, so the table's
+   *  truncation map starts complete without a second pass. */
+  def replay(root: String, schema: StructType,
+      committedLsn: Long): (Seq[CdcEvent], Map[String, Long]) = {
     val files = Fio.list(walDir(root)).filter(_.endsWith(".jsonl")).sorted
-    files.flatMap { f =>
-      Fio.readString(s"${walDir(root)}/$f").split('\n').iterator
-        .filter(_.nonEmpty).map(l => eventFromJson(schema, l))
-    }.filter {
-      case e: Commit => e.lsn > committedLsn
-      case e: Append => e.lsn > committedLsn
-      case e: Delete => e.lsn > committedLsn
-      // alters publish their schema change immediately, so a replayed
-      // alter may already be reflected in the manifest — the table's
-      // alter event handling is idempotent to absorb that
-      case e: AlterAdd => e.lsn > committedLsn
-      case e: AlterDrop => e.lsn > committedLsn
-      case _: StreamAbort => true
+    val segs = files.map { f =>
+      f -> Fio.readString(s"${walDir(root)}/$f").split('\n').iterator
+        .filter(_.nonEmpty).map(l => eventFromJson(schema, l)).toSeq
     }
+    (segs.flatMap(_._2).filter(e => lsnOf(e) > committedLsn),
+      segs.map { case (f, es) => f -> maxLsnOf(es) }.toMap)
   }
 
-  /** Drop WAL files whose events are all at-or-below the durable LSN. */
-  def truncate(root: String, persistedLsn: Long): Unit = {
-    val dir = walDir(root)
-    Fio.list(dir).filter(_.endsWith(".jsonl")).foreach { f =>
-      val maxLsn = Fio.readString(s"$dir/$f").split('\n').iterator
-        .filter(_.nonEmpty)
-        .map(l => mapper.readTree(l).path("lsn").asLong(Long.MaxValue))
-        .foldLeft(-1L)(math.max)
-      if (maxLsn >= 0 && maxLsn <= persistedLsn) Fio.delete(s"$dir/$f")
+  /** Drop WAL files whose events are all at-or-below the durable LSN,
+   *  deciding from `segments` (segment -> max LSN, as returned by
+   *  `append`/`replay`) without reading any segment back. A segment
+   *  leaves the map only once its file is deleted, so a failed delete
+   *  is retried by the next truncation. */
+  def truncate(root: String, persistedLsn: Long,
+      segments: scala.collection.mutable.Map[String, Long]): Unit =
+    segments.collect {
+      case (seg, maxLsn) if maxLsn >= 0 && maxLsn <= persistedLsn => seg
+    }.foreach { seg =>
+      Fio.delete(s"${walDir(root)}/$seg")
+      segments -= seg
     }
-  }
 
   // ---- event <-> JSON ---------------------------------------------------
 

@@ -90,10 +90,12 @@ class WalDvFuzzSpec extends AnyFunSuite {
       }
       val root = freshRoot()
       // several append calls: replay must restitch multiple files in order
-      events.grouped(math.max(1, events.size / (1 + r.nextInt(3)))).foreach(g =>
-        Wal.append(root, schema, g.toSeq))
-      val back = Wal.replay(root, schema, committedLsn = -1L)
+      val appended = events.grouped(math.max(1, events.size / (1 + r.nextInt(3))))
+        .map(g => Wal.append(root, schema, g.toSeq)).toMap
+      val (back, segments) = Wal.replay(root, schema, committedLsn = -1L)
       assert(back.size == events.size, s"seed=$seed count drift")
+      // replay reports the same per-segment max LSN append returned
+      assert(segments == appended, s"seed=$seed segment max-LSN drift")
       back.lazyZip(events).zipWithIndex.foreach { case ((got, want), i) =>
         (got, want) match {
           case (Append(gr, gl, gx), Append(wr, wl, wx)) =>
