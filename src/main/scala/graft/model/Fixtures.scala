@@ -2,7 +2,8 @@ package graft.model
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.conf.Configuration
+import graft.format.Fio
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit => PqTimeUnit}
@@ -49,8 +50,9 @@ object Fixtures {
     unitCache.computeIfAbsent(path, { _ =>
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(firstPart(path).toURI.toString),
-        new Configuration())
-      val reader = ParquetFileReader.open(in)
+        Fio.hadoopConf)
+      val reader = ParquetFileReader.open(in,
+        HadoopReadOptions.builder(Fio.hadoopConf).build())
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         require(schema.containsField(column),

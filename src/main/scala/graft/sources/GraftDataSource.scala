@@ -1,12 +1,13 @@
 package graft.sources
 
-import graft.format.{DataFileEntry, DvSidecar, Manifest, ManifestLog}
+import graft.format.{DataFileEntry, DvSidecar, Fio, Manifest, ManifestLog}
 import graft.table.{DvCache, GraftTable}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -44,17 +45,27 @@ import scala.jdk.CollectionConverters._
  *    the `RowSelection` analogue (`table_provider.rs:140-167`): fully
  *    deleted FILES are never planned, fully deleted ROW GROUPS are
  *    dropped from the footer handed to the reader (their pages are
- *    never fetched or decoded), and residual per-row deletes are
- *    skipped while iterating; each partition carries only its own
- *    file's roaring blob,
+ *    never fetched or decoded), and residual per-row deletes become
+ *    SELECTION VECTORS over the decoded batch (Photon's filtered-batch
+ *    representation): a batch with deletes is served as thin column
+ *    views that remap each row id through an `int[]` of live rows, a
+ *    batch without deletes passes through untouched, and a fully
+ *    deleted batch is never emitted; each file carries only its own
+ *    roaring blob,
  *  - VECTORIZED DECODE: Spark's own `VectorizedParquetRecordReader`
- *    does the page decode into `ColumnarBatch`es. DV-free files (the
- *    common case after compaction) stream whole batches to Spark
+ *    does the page decode into `ColumnarBatch`es, and every scan with
+ *    at least one column streams batches to Spark
  *    (`supportColumnarReads`), so the scan feeds whole-stage codegen's
- *    ColumnarToRow exactly like the built-in parquet source; DV'd
- *    files keep batch decode but iterate rows to apply the skips,
- *  - one InputPartition per data file (files are written ~rowsPerFile
- *    ≈ 128 MiB, the natural split granularity at cluster scale),
+ *    ColumnarToRow exactly like the built-in parquet source — with or
+ *    without DVs,
+ *  - PACKED INPUT PARTITIONS by Spark's own `FilePartition` rule:
+ *    files (and byte-range splits of files above
+ *    `spark.sql.files.maxPartitionBytes`) are bin-packed, each costing
+ *    its bytes plus `spark.sql.files.openCostInBytes`, into partitions
+ *    of at most min(maxPartitionBytes, max(openCost, total bytes /
+ *    parallelism)) — many small files read in about `parallelism`
+ *    tasks, not one task each. Limit-capped and key-grouped (bucketed)
+ *    scans keep one partition per file,
  *  - AGGREGATE PUSHDOWN: unfiltered global COUNT(*)/MIN/MAX are
  *    answered straight from the manifest (row counts minus DV
  *    cardinality; per-file min/max stats) — zero parquet bytes read,
@@ -418,6 +429,29 @@ private[graft] class GraftScanBuilder(root: String, manifest: Manifest)
 }
 
 private[sources] object GraftScan {
+  /** Spark's own `FilePartition` packing ("next fit decreasing"): a
+   *  split costs its bytes plus `openCost`, and partitions close at
+   *  min(maxPartitionBytes, max(openCost, total cost / parallelism)),
+   *  so many small files read in about `parallelism` tasks. */
+  def pack(splits: Seq[(GraftInputPartition, Long)], maxPartitionBytes: Long,
+      openCost: Long, parallelism: Int): Array[InputPartition] = {
+    val total = splits.map(_._2 + openCost).sum
+    val maxSplit = math.min(maxPartitionBytes, math.max(openCost, total / parallelism))
+    val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    val cur = scala.collection.mutable.ArrayBuffer[GraftInputPartition]()
+    var size = 0L
+    def close(): Unit = if (cur.nonEmpty) {
+      out += GraftPackedPartition(cur.toArray); cur.clear(); size = 0L
+    }
+    splits.sortBy(-_._2).foreach { case (p, bytes) =>
+      if (size + bytes > maxSplit) close()
+      size += bytes + openCost
+      cur += p
+    }
+    close()
+    out.toArray
+  }
+
   /** A filter we can evaluate against per-file (min, max) stats. */
   def prunable(schema: StructType, f: Filter): Boolean = {
     def ok(col: String, v: Any): Boolean =
@@ -874,8 +908,11 @@ private[sources] class GraftScan(root: String, manifest: Manifest,
     merged.map { case (f, bm) => f -> DvCache.serialize(bm) }.toMap
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    survivors.flatMap { e =>
+  override def planInputPartitions(): Array[InputPartition] = {
+    val sqlConf = org.apache.spark.sql.internal.SQLConf.get
+    val maxPartitionBytes = sqlConf.filesMaxPartitionBytes
+    // (partition, bytes) per file or byte range of a file
+    val splits = survivors.flatMap { e =>
       val path = s"$root/data/${e.path}"
       val dv = dvBlobs.getOrElse(e.path, null)
       // Intra-file parallelism without any planning-time footer IO
@@ -885,36 +922,36 @@ private[sources] class GraftScan(root: String, manifest: Manifest,
       // (parquet-mr's own range rule), so ranges partition the groups
       // exactly. Limit-capped scans stay one partition per file — the
       // cap accounting is per file.
-      val maxSplit =
-        try org.apache.spark.sql.SparkSession.active.conf
-          .get("spark.sql.files.maxPartitionBytes", "134217728").toLong
-        catch { case _: Throwable => 134217728L }
-      if (limit >= 0L || e.bytes <= maxSplit)
+      if (limit >= 0L || e.bytes <= maxPartitionBytes)
         Seq(GraftInputPartition(path, e.rows, dv, limit,
-          bucket = e.bucket): InputPartition)
+          bucket = e.bucket) -> e.bytes)
       else {
-        val nSplits = math.max(1L, (e.bytes + maxSplit - 1) / maxSplit)
+        val nSplits = (e.bytes + maxPartitionBytes - 1) / maxPartitionBytes
         val span = (e.bytes + nSplits - 1) / nSplits
         (0L until nSplits).map { i =>
+          val last = i == nSplits - 1
           GraftInputPartition(path, e.rows, dv, limit,
             splitStart = i * span,
-            splitEnd = if (i == nSplits - 1) Long.MaxValue else (i + 1) * span,
-            bucket = e.bucket)
-            : InputPartition
+            splitEnd = if (last) Long.MaxValue else (i + 1) * span,
+            bucket = e.bucket) -> (if (last) e.bytes - i * span else span)
         }
       }
-    }.toArray
+    }
+    // key-grouped scans hand Spark one partition per file so each
+    // carries its bucket key (HasPartitionKey, storage-partitioned
+    // joins); limit caps count per file
+    if (limit >= 0L || outputPartitioning().isInstanceOf[
+        org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
+      splits.map(_._1).toArray
+    else GraftScan.pack(splits, maxPartitionBytes, sqlConf.filesOpenCostInBytes,
+      sqlConf.filesMinPartitionNum.getOrElse(
+        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json,
       manifest.schema.fields
-        .map(f => f.name -> graft.model.SchemaDsl.physicalName(f)).toMap,
-      // Spark requires every partition of a scan to agree on columnar
-      // vs row output, so the choice is per-SCAN: batches only when no
-      // planned file carries a DV (true for every post-compaction
-      // snapshot — compaction folds DVs into rewritten files)
-      allColumnar = required.fields.nonEmpty &&
-        survivors.forall(e => !dvBlobs.contains(e.path)))
+        .map(f => f.name -> graft.model.SchemaDsl.physicalName(f)).toMap)
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =
@@ -946,8 +983,8 @@ private[sources] class GraftScan(root: String, manifest: Manifest,
  * re-emitting or silently dropping rows.
  *
  * Scale shape: offsets are O(1) manifest-version reads; planning a
- * batch is O(new files) driver metadata; the data path is the same
- * vectorized per-file partitions as the batch scan, with the same
+ * batch is O(new files) driver metadata; the data path is the batch
+ * scan's vectorized reader, one partition per new file, with the same
  * column pruning and stat pruning applied. A 100-TB table streams at
  * the cost of its NEW files only — the incremental invariant.
  */
@@ -1003,8 +1040,7 @@ private[graft] class GraftMicroBatchStream(root: String,
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json,
       manifest.schema.fields
-        .map(f => f.name -> graft.model.SchemaDsl.physicalName(f)).toMap,
-      allColumnar = required.fields.nonEmpty)
+        .map(f => f.name -> graft.model.SchemaDsl.physicalName(f)).toMap)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1667,31 +1703,58 @@ private[sources] final case class GraftInputPartition(
     new GenericInternalRow(Array[Any](bucket.toInt))
 }
 
+/** Several files (or byte ranges) read back to back by one task — the
+ *  batch scan's packed partition (`GraftScan.pack`). */
+private[sources] final case class GraftPackedPartition(
+    files: Array[GraftInputPartition]) extends InputPartition
+
 private[sources] class GraftReaderFactory(requiredJson: String,
-    physNames: Map[String, String], allColumnar: Boolean)
+    physNames: Map[String, String])
     extends PartitionReaderFactory {
 
-  private def required: StructType =
+  @transient private lazy val required: StructType =
     DataType.fromJson(requiredJson).asInstanceOf[StructType]
 
-  /** DV-free scans stream ColumnarBatches straight to Spark (the
-   *  ColumnarToRow-fed fast path); scans touching any file with deletes
-   *  iterate rows so positional skips can apply. COUNT(*)-style
-   *  zero-column scans stay on the row path (synthetic rows, zero
-   *  parquet bytes). Scan-level, not per-partition: Spark rejects
-   *  mixed-mode scans. */
+  /** Every scan with a column streams ColumnarBatches to Spark (the
+   *  ColumnarToRow-fed fast path), DV'd files included: their deletes
+   *  ride as selection vectors. COUNT(*)-style zero-column scans stay
+   *  on the row path (synthetic rows, zero parquet bytes). */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    allColumnar
+    required.fields.nonEmpty
+
+  private def files(partition: InputPartition): Array[GraftInputPartition] =
+    partition match {
+      case p: GraftInputPartition => Array(p)
+      case GraftPackedPartition(fs) => fs
+    }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
-      required, physNames)
+    new GraftChainedReader(files(partition),
+      new GraftColumnarReader(_, required, physNames))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[GraftInputPartition]
-    if (required.fields.isEmpty) new GraftCountReader(part)
-    else new GraftRowReader(part, required, physNames)
+    require(required.fields.isEmpty, "scans with columns are read columnar")
+    new GraftChainedReader(files(partition), new GraftCountReader(_))
   }
+}
+
+/** Reads `files` one after another, opening each only when the
+ *  previous one is exhausted (one open parquet file per task). */
+private[sources] class GraftChainedReader[T](files: Array[GraftInputPartition],
+    open: GraftInputPartition => PartitionReader[T]) extends PartitionReader[T] {
+  private var opened = 0
+  private var cur: PartitionReader[T] = _
+
+  override def next(): Boolean = {
+    while (cur != null || opened < files.length) {
+      if (cur == null) { cur = open(files(opened)); opened += 1 }
+      if (cur.next()) return true
+      cur.close(); cur = null
+    }
+    false
+  }
+  override def get(): T = cur.get()
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
 /**
@@ -1717,7 +1780,9 @@ private[sources] object GraftVectorReader {
     val physRequired = StructType(required.fields.map(f =>
       f.copy(name = physNames.getOrElse(f.name, f.name))))
 
-    val conf = new Configuration()
+    // a copy of the shared, already-parsed conf: `new Configuration()`
+    // re-parses Hadoop's XML defaults (~8 ms per file)
+    val conf = new Configuration(Fio.hadoopConf)
     // the conf the built-in parquet source prepares on its hadoopConf —
     // ParquetReadSupport resolves the requested schema from it
     conf.set("parquet.read.support.class",
@@ -1732,7 +1797,9 @@ private[sources] object GraftVectorReader {
 
     val hPath = new org.apache.hadoop.fs.Path(part.path)
     val inputFile = HadoopInputFile.fromPath(hPath, conf)
-    val fr = ParquetFileReader.open(inputFile)
+    // explicit options: the one-argument open builds (and parses) a
+    // fresh Hadoop Configuration per call
+    val fr = ParquetFileReader.open(inputFile, HadoopReadOptions.builder(conf).build())
     val footer = try fr.getFooter finally fr.close()
 
     // absolute row positions per row group: positions are the running
@@ -1773,59 +1840,124 @@ private[sources] object GraftVectorReader {
     dv.rankLong(start + n - 1) - (if (start > 0) dv.rankLong(start - 1) else 0L)
 }
 
-/** Columnar reader for DV-free files: whole `ColumnarBatch`es flow to
- *  Spark, identical shape to the built-in vectorized parquet scan. */
+/** Columnar reader: whole `ColumnarBatch`es flow to Spark, identical
+ *  shape to the built-in vectorized parquet scan. Under a DV each
+ *  decoded row maps to its absolute position through the kept
+ *  row-group ranges (fully-deleted groups never reached the reader); a
+ *  batch without deletes passes through as decoded, a fully deleted one
+ *  is skipped, and a partly deleted one is served through
+ *  [[GraftSelectedVector]] views over its live rows. */
 private[sources] class GraftColumnarReader(part: GraftInputPartition,
     required: StructType, physNames: Map[String, String])
     extends PartitionReader[ColumnarBatch] {
-  private val (reader, _) = GraftVectorReader.open(part, required, physNames, null)
-  reader.enableReturningBatches()
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    if (part.cap >= 0L && emitted >= part.cap) return false
-    val has = reader.nextKeyValue()
-    if (has) emitted += get().numRows()
-    has
-  }
-  override def get(): ColumnarBatch =
-    reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-  override def close(): Unit = reader.close()
-}
-
-/** Row reader for files WITH deletion vectors: batch-decoded by the
- *  same vectorized reader, iterated row-wise to skip deleted positions
- *  (fully-deleted row groups were already dropped from the footer, so
- *  the position of the i-th row read maps through the kept ranges). */
-private[sources] class GraftRowReader(part: GraftInputPartition,
-    required: StructType, physNames: Map[String, String])
-    extends PartitionReader[InternalRow] {
   private val dv: Roaring64Bitmap =
     if (part.dvBlob == null) null else DvCache.deserialize(part.dvBlob)
   private val (reader, ranges) = GraftVectorReader.open(part, required, physNames, dv)
+  reader.enableReturningBatches()
   private var rangeIdx = 0
   private var ordinalInRange = 0L
   private var emitted = 0L
-  private var current: InternalRow = _
+  private var live: Array[Int] = Array.emptyIntArray
+  private var current: ColumnarBatch = _
+
+  // deleted positions in read order (kept ranges ascend through the file)
+  private val deletedIt = if (dv == null) null else dv.getLongIterator
+
+  /** Live row ids of the next `n` decoded rows into `live`; returns
+   *  their count (`n` = none deleted, `live` then left unfilled). */
+  private def selectLive(n: Int): Int = {
+    var i = 0
+    var nLive = 0
+    var anyDeleted = false
+    while (i < n) {
+      while (ordinalInRange >= ranges(rangeIdx)._2) {
+        rangeIdx += 1; ordinalInRange = 0L
+      }
+      val pos = ranges(rangeIdx)._1 + ordinalInRange
+      val take = math.min(n - i, ranges(rangeIdx)._2 - ordinalInRange).toInt
+      deletedIt.advanceIfNeeded(pos)
+      var nextDeleted = if (deletedIt.hasNext) deletedIt.peekNext() else Long.MaxValue
+      if (!anyDeleted && nextDeleted < pos + take) {
+        anyDeleted = true
+        if (live.length < n) live = new Array[Int](n)
+        var j = 0
+        while (j < i) { live(j) = j; j += 1 } // rows so far were all live
+      }
+      if (!anyDeleted) nLive += take
+      else {
+        var j = 0
+        while (j < take) {
+          if (pos + j == nextDeleted) {
+            deletedIt.next()
+            nextDeleted = if (deletedIt.hasNext) deletedIt.peekNext() else Long.MaxValue
+          } else { live(nLive) = i + j; nLive += 1 }
+          j += 1
+        }
+      }
+      i += take; ordinalInRange += take
+    }
+    nLive
+  }
 
   override def next(): Boolean = {
     if (part.cap >= 0L && emitted >= part.cap) return false
     while (reader.nextKeyValue()) {
-      while (rangeIdx < ranges.length && ordinalInRange >= ranges(rangeIdx)._2) {
-        rangeIdx += 1; ordinalInRange = 0L
-      }
-      val pos = ranges(rangeIdx)._1 + ordinalInRange
-      ordinalInRange += 1
-      if (dv == null || !dv.contains(pos)) {
-        current = reader.getCurrentValue.asInstanceOf[InternalRow]
-        emitted += 1
+      val batch = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
+      val n = batch.numRows()
+      val nLive = if (dv == null) n else selectLive(n)
+      // the cap is a row budget: the last batch is cut to it
+      val out = if (part.cap >= 0L) math.min(nLive.toLong, part.cap - emitted).toInt
+        else nLive
+      if (out > 0) {
+        current =
+          if (nLive == n) { batch.setNumRows(out); batch }
+          else new ColumnarBatch(Array.tabulate[
+            org.apache.spark.sql.vectorized.ColumnVector](batch.numCols())(c =>
+              new GraftSelectedVector(batch.column(c), live, out)), out)
+        emitted += out
         return true
       }
     }
     false
   }
-  override def get(): InternalRow = current
+  override def get(): ColumnarBatch = current
   override def close(): Unit = reader.close()
+}
+
+/** A selection-vector view of `numRows` rows: row `i` of the view is
+ *  row `live(i)` of `base`. Zero-copy; children are views too, so
+ *  struct, array, map, decimal and interval columns resolve through the
+ *  same remap. */
+private[sources] final class GraftSelectedVector(
+    base: org.apache.spark.sql.vectorized.ColumnVector, live: Array[Int],
+    numRows: Int)
+    extends org.apache.spark.sql.vectorized.ColumnVector(base.dataType()) {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarMap}
+  import org.apache.spark.sql.types.Decimal
+  import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
+
+  // the reader owns and closes the decoded vectors
+  override def close(): Unit = ()
+  override def hasNull(): Boolean = base.hasNull()
+  override def numNulls(): Int =
+    if (!base.hasNull()) 0 else (0 until numRows).count(isNullAt)
+  override def isNullAt(rowId: Int): Boolean = base.isNullAt(live(rowId))
+  override def getBoolean(rowId: Int): Boolean = base.getBoolean(live(rowId))
+  override def getByte(rowId: Int): Byte = base.getByte(live(rowId))
+  override def getShort(rowId: Int): Short = base.getShort(live(rowId))
+  override def getInt(rowId: Int): Int = base.getInt(live(rowId))
+  override def getLong(rowId: Int): Long = base.getLong(live(rowId))
+  override def getFloat(rowId: Int): Float = base.getFloat(live(rowId))
+  override def getDouble(rowId: Int): Double = base.getDouble(live(rowId))
+  override def getArray(rowId: Int): ColumnarArray = base.getArray(live(rowId))
+  override def getMap(rowId: Int): ColumnarMap = base.getMap(live(rowId))
+  override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal =
+    base.getDecimal(live(rowId), precision, scale)
+  override def getUTF8String(rowId: Int): UTF8String = base.getUTF8String(live(rowId))
+  override def getBinary(rowId: Int): Array[Byte] = base.getBinary(live(rowId))
+  override def getInterval(rowId: Int): CalendarInterval = base.getInterval(live(rowId))
+  override def getChild(ordinal: Int): ColumnVector =
+    new GraftSelectedVector(base.getChild(ordinal), live, numRows)
 }
 
 /** Zero-column scans (COUNT(*) shapes): no parquet bytes touched —

@@ -2544,7 +2544,8 @@ final class GraftTable private (
   private def khFooterRange(path: String): Option[(Long, Long)] = try {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), Fio.hadoopConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(Fio.hadoopConf).build())
     try {
       val blocks = reader.getFooter.getBlocks
       var mn = Long.MaxValue; var mx = Long.MinValue; var seen = false

@@ -156,6 +156,8 @@ object Wal {
     case _: Boolean => BooleanType
     case _: java.sql.Date => DateType
     case _: java.sql.Timestamp => TimestampType
+    // written as plain text; coerceKey restores the field's scale
+    case _: java.math.BigDecimal => DecimalType.SYSTEM_DEFAULT
     case null => NullType
     case other =>
       throw new IllegalArgumentException(s"unsupported WAL key type: ${other.getClass}")
@@ -255,8 +257,8 @@ object Wal {
     else n.asText
 
   /** Re-typed replayed delete keys: JSON round-trips lose Int-vs-Long
-   *  and date/timestamp typing, which must match Row values exactly for
-   *  the mem-index lookup and the index join. */
+   *  and date/timestamp/decimal typing, which must match Row values
+   *  exactly for the mem-index lookup and the index join. */
   def coerceKey(key: Seq[Any], fields: Seq[StructField]): Seq[Any] =
     key.zip(fields).map { case (v, f) =>
       (v, f.dataType) match {
@@ -270,6 +272,8 @@ object Wal {
           t
         case (d: Double, FloatType) => d.toFloat
         case (s: String, DateType) => java.sql.Date.valueOf(s)
+        case (s: String, d: DecimalType) =>
+          new java.math.BigDecimal(s).setScale(d.scale, java.math.RoundingMode.HALF_UP)
         case (x, _) => x
       }
     }

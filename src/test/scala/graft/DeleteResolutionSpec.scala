@@ -95,24 +95,23 @@ class DeleteResolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- hash parity --------------------------------------------------
 
   private case class KeyCase(name: String, keyTypes: Seq[(String, String)],
-      key: Int => Seq[Any], viaWal: Boolean)
+      key: Int => Seq[Any])
 
   private val day0 = java.time.LocalDate.of(2024, 1, 1)
   private val keyCases = Seq(
-    KeyCase("int", Seq("k" -> "int32"), i => Seq(i * 7), viaWal = true),
-    KeyCase("long", Seq("k" -> "int64"), i => Seq(i * 1000003L), viaWal = true),
-    KeyCase("string", Seq("k" -> "string"), i => Seq(s"key-$i-é"), viaWal = true),
+    KeyCase("int", Seq("k" -> "int32"), i => Seq(i * 7)),
+    KeyCase("long", Seq("k" -> "int64"), i => Seq(i * 1000003L)),
+    KeyCase("string", Seq("k" -> "string"), i => Seq(s"key-$i-é")),
     KeyCase("date", Seq("k" -> "date32"),
-      i => Seq(java.sql.Date.valueOf(day0.plusDays(i))), viaWal = true),
+      i => Seq(java.sql.Date.valueOf(day0.plusDays(i)))),
     KeyCase("timestamp", Seq("k" -> "timestamp"), i => {
       val ts = new java.sql.Timestamp(1700000000000L + i * 60000L)
       ts.setNanos(123456000); Seq(ts)
-    }, viaWal = true),
-    // the WAL does not encode decimal delete keys: direct path only
+    }),
     KeyCase("decimal(10,2)", Seq("k" -> "decimal(10,2)"),
-      i => Seq(new java.math.BigDecimal(s"$i.25")), viaWal = false),
+      i => Seq(new java.math.BigDecimal(s"$i.25"))),
     KeyCase("composite(int,string)", Seq("a" -> "int32", "b" -> "string"),
-      i => Seq(i % 5, s"b$i"), viaWal = true))
+      i => Seq(i % 5, s"b$i")))
 
   keyCases.foreach { kc =>
     test(s"hash-filtered delete resolution: ${kc.name} keys, ranged + unranged index") {
@@ -120,7 +119,7 @@ class DeleteResolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
       val keyNames = kc.keyTypes.map(_._1)
       val root = tmpDir() + "/hp"
       val t = GraftTable.create(spark, root, schema, Identity.Keys(keyNames),
-        TableConfig(walEnabled = kc.viaWal, rowsPerFile = 16))
+        TableConfig(rowsPerFile = 16))
       def row(i: Int) = Row.fromSeq(kc.key(i) :+ i.toLong)
       // two flushed generations merged into ranged buckets, then an
       // unranged flush on top
@@ -152,13 +151,11 @@ class DeleteResolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(dueKeys.map(driverHash).toSet == sparkHashes, "hash parity")
       val expectProbe = (idx.count(e => sparkHashes.exists(e.coversHash)), idx.size)
 
-      val t2 = if (kc.viaWal) {
-        // crash right after the WAL append: the batch exists only in the
-        // log, and reopen resolves its deletes from JSON-replayed keys
-        Wal.append(root, schema, events)
-        GraftTable.open(spark, root, Identity.Keys(keyNames),
-          TableConfig(rowsPerFile = 16))
-      } else { t.apply(events); t }
+      // crash right after the WAL append: the batch exists only in the
+      // log, and reopen resolves its deletes from JSON-replayed keys
+      Wal.append(root, schema, events)
+      val t2 = GraftTable.open(spark, root, Identity.Keys(keyNames),
+        TableConfig(rowsPerFile = 16))
       assert(t2.lastDeleteProbe == expectProbe)
       val want = ((1 to 100).toSet -- delIds + 17).map(i => kc.key(i) :+ i.toLong)
       val got = t2.read().collect().map(_.toSeq).toSet

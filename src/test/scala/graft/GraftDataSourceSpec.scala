@@ -387,11 +387,10 @@ class GraftDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.drop()
   }
 
-  test("DV-free scans are columnar; scans under DVs flip to row mode") {
-    // the plan-shape contract behind the DSv2 perf story: without
-    // deletes the scan feeds ColumnarBatches into ColumnarToRow (the
-    // built-in parquet shape); any DV'd file flips the whole scan to
-    // row mode so positional skips can apply
+  test("scans are columnar with and without DVs") {
+    // the plan-shape contract behind the DSv2 perf story: the scan feeds
+    // ColumnarBatches into ColumnarToRow (the built-in parquet shape);
+    // DV'd files keep it, their deletes ride as selection vectors
     val dir = tmpDir() + "/colmode"
     val t = GraftTable.create(spark, dir, schema,
       Identity.Keys(Seq("id")), TableConfig(memSliceSize = 4, walEnabled = false))
@@ -404,31 +403,77 @@ class GraftDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan().contains("ColumnarToRow"),
       "delete-free snapshot must serve ColumnarBatches")
     t.apply(Seq(Delete(Seq(3L), 20L), Commit(21L)))
-    assert(!plan().contains("ColumnarToRow"),
-      "a DV'd file must flip the scan to the row path")
-    // compaction folds the DVs away -> columnar again
+    assert(plan().contains("ColumnarToRow"),
+      "a DV'd file must still serve ColumnarBatches")
+    // compaction folds the DVs away -> still columnar
     t.optimize()
     assert(plan().contains("ColumnarToRow"),
-      "post-compaction snapshot must be columnar again")
+      "post-compaction snapshot must be columnar")
+    t.drop()
+  }
+
+  test("small DV'd files pack into few partitions; limit and bucketed scans keep one per file") {
+    val dir = tmpDir() + "/packed"
+    val t = GraftTable.create(spark, dir, schema,
+      Identity.Keys(Seq("id")), TableConfig(memSliceSize = 4, walEnabled = false))
+    def row(i: Long) = Row(i, s"n$i", i * 1.5, i % 2 == 0,
+      java.sql.Timestamp.valueOf("2025-01-01 00:00:01"))
+    val par = spark.sparkContext.defaultParallelism
+    val nFiles = 4 * par + 4
+    (0 until nFiles).foreach { f =>
+      val ids = (f * 5L + 1) to (f * 5L + 5)
+      t.apply(ids.flatMap(i => CdcEvent.upsert(row(i), Seq(i), i)) :+ Commit(f * 5L + 5))
+    }
+    // one delete in every file: every file carries a DV
+    val lsn = nFiles * 5L + 10
+    t.apply((0 until nFiles).map(f => Delete(Seq(f * 5L + 3), lsn + f): CdcEvent) :+
+      Commit(lsn + nFiles))
+    val m = t.currentManifest
+    assert(m.dataFiles.size == nFiles && m.dataFiles.forall(_.deletes == 1L))
+    def scanOf(m: graft.format.Manifest, limit: Option[Int] = scala.None) = {
+      val sb = new GraftScanBuilder(t.root, m)
+      limit.foreach(sb.pushLimit)
+      sb.build()
+    }
+    val packed = scanOf(m).toBatch.planInputPartitions().length
+    assert(packed < nFiles && packed <= 2 * par,
+      s"$nFiles small files planned as $packed partitions")
+    val expected = t.read(scala.None).orderBy("id").collect().toSeq
+    val got = spark.read.format("graft").load(dir).orderBy("id").collect().toSeq
+    assert(got == expected && got.size == nFiles * 4)
+    // the cap is counted per file
+    assert(scanOf(m, Some(1000)).toBatch.planInputPartitions().length == nFiles)
+    // key-grouped (bucketed) scans carry one bucket key per partition
+    t.optimize(bucketBy = Some(4 * par))
+    val b = t.currentManifest
+    assert(b.dataFiles.size > 2 * par && b.dataFiles.forall(_.bucket >= 0L))
+    val bucketed = scanOf(b)
+    assert(bucketed.asInstanceOf[org.apache.spark.sql.connector.read
+      .SupportsReportPartitioning].outputPartitioning().isInstanceOf[
+        org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
+    assert(bucketed.toBatch.planInputPartitions().length == b.dataFiles.size)
+    assert(spark.read.format("graft").load(dir).orderBy("id").collect().toSeq == expected)
     t.drop()
   }
 
   test("decimal, array, and struct columns read identically to the library path") {
     // the vectorized reader serves the full type surface the reference's
     // table provider serves (whatever Arrow schema the table has,
-    // table_provider.rs:74-171) — including under DVs (row path)
+    // table_provider.rs:74-171) — including under DVs (selection view)
     val dir = tmpDir() + "/typed"
     val sch = StructType(Seq(
       StructField("id", LongType),
       StructField("price", DecimalType(12, 2)),
       StructField("tags", ArrayType(StringType)),
       StructField("meta", StructType(Seq(
-        StructField("k", StringType), StructField("v", LongType))))))
+        StructField("k", StringType), StructField("v", LongType)))),
+      StructField("attrs", MapType(StringType, LongType))))
     val t = GraftTable.create(spark, dir, sch,
       Identity.Keys(Seq("id")), TableConfig(memSliceSize = 4, walEnabled = false))
     def row(i: Long) = Row(i, BigDecimal(i * 100 + 1, 2).bigDecimal,
       if (i % 5 == 0) null else Seq(s"t$i", s"u$i"),
-      Row(s"k$i", i * 10))
+      Row(s"k$i", i * 10),
+      if (i % 4 == 0) null else Map(s"a$i" -> i, "b" -> -i))
     t.apply((1L to 12L).flatMap(i =>
       CdcEvent.upsert(row(i), Seq(i), i)) :+ Commit(13L))
     def collectBoth() = {
@@ -441,11 +486,13 @@ class GraftDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v21.head.getDecimal(1) == new java.math.BigDecimal("1.01"))
     assert(v21(1).getSeq[String](2) == Seq("t2", "u2"))
     assert(v21.head.getStruct(3).getLong(1) == 10L)
-    // a delete flips the scan to the DV row path — same contract
+    assert(v21.head.getMap[String, Long](4) == Map("a1" -> 1L, "b" -> -1L))
+    // a delete serves its file through the selection view — same contract
     t.apply(Seq(Delete(Seq(6L), 20L), Commit(21L)))
     val (lib2, v22) = collectBoth()
-    assert(v22 == lib2, "DV row path must match the library read")
+    assert(v22 == lib2, "the DV selection view must match the library read")
     assert(!v22.exists(_.getLong(0) == 6L))
+    assert(v22(5).getMap[String, Long](4) == Map("a7" -> 7L, "b" -> -7L))
     t.drop()
   }
 

@@ -13,15 +13,18 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /**
  * The vectorized partition reader underneath the DSv2 connector
- * (`GraftVectorReader`): proves the three DV skip levels the reference
- * applies via `RowSelection` (`table_provider.rs:140-167`) —
- * fully-deleted row groups never reach the parquet reader (dropped from
- * the doctored footer), residual positions are skipped row-wise against
- * absolute row indexes, and DV-free scans stream whole ColumnarBatches.
+ * (`GraftVectorReader`, `GraftColumnarReader`): proves the three DV
+ * skip levels the reference applies via `RowSelection`
+ * (`table_provider.rs:140-167`) — fully-deleted row groups never reach
+ * the parquet reader (dropped from the doctored footer), and residual
+ * positions are removed per batch through selection vectors against
+ * absolute row indexes: batches without deletes pass through as
+ * decoded, fully deleted batches are never emitted.
  */
 class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -38,14 +41,15 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType)))
 
-  /** one parquet file with MANY row groups (tiny block size) */
-  private def writeMultiGroupFile(n: Long): (String, Seq[(Long, Long)]) = {
+  /** one parquet file of ids 0 until n; a tiny block size gives MANY row
+   *  groups (hundreds of rows each), the default one row group */
+  private def writeFile(n: Long, blockSize: Option[Int])
+      : (String, Seq[(Long, Long)]) = {
     val dir = Files.createTempDirectory("graft-rg").toString + "/data"
-    spark.range(0, n).select(col("id"),
+    val w = spark.range(0, n).select(col("id"),
         concat(lit("name-"), col("id")).as("name"))
       .coalesce(1).write
-      .option("parquet.block.size", "8192") // ~hundreds of rows per group
-      .parquet(dir)
+    blockSize.fold(w)(b => w.option("parquet.block.size", b.toString)).parquet(dir)
     val file = new java.io.File(dir).listFiles()
       .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
     val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
@@ -55,6 +59,34 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     (file, blocks.map { b => val s = off; off += b.getRowCount; (s, b.getRowCount) })
   }
 
+  private def writeMultiGroupFile(n: Long) = writeFile(n, Some(8192))
+
+  private def dvOf(positions: Iterable[Long]): Roaring64Bitmap = {
+    val dv = new Roaring64Bitmap()
+    positions.foreach(dv.addLong)
+    dv
+  }
+
+  /** What one emitted batch held, captured before the reader reuses
+   *  its vectors for the next batch. */
+  private case class Batch(rows: Int, view: Boolean, ids: Seq[Long],
+      firstName: String)
+
+  private def readBatches(part: GraftInputPartition): Seq[Batch] = {
+    val cr = new GraftColumnarReader(part, schema, Map.empty)
+    val out = ArrayBuffer[Batch]()
+    try while (cr.next()) {
+      val b: ColumnarBatch = cr.get()
+      out += Batch(b.numRows(), b.column(0).isInstanceOf[GraftSelectedVector],
+        (0 until b.numRows()).map(b.column(0).getLong),
+        b.column(1).getUTF8String(0).toString)
+    } finally cr.close()
+    out.toSeq
+  }
+
+  private def readIds(part: GraftInputPartition): Seq[Long] =
+    readBatches(part).flatMap(_.ids)
+
   test("fully-deleted row groups are dropped from the doctored footer") {
     val n = 4000L
     val (file, groups) = writeMultiGroupFile(n)
@@ -62,9 +94,7 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     // delete ALL of group 0 plus the first row of group 1
     val (g0start, g0rows) = groups.head
     val (g1start, _) = groups(1)
-    val dv = new Roaring64Bitmap()
-    (g0start until g0start + g0rows).foreach(dv.addLong)
-    dv.addLong(g1start)
+    val dv = dvOf((g0start until g0start + g0rows) :+ g1start)
     val part = GraftInputPartition(file, n, DvCache.serialize(dv))
 
     val (reader, kept) = GraftVectorReader.open(part, schema, Map.empty, dv)
@@ -75,11 +105,8 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
         "first surviving range must start at group 1's absolute position")
     } finally reader.close()
 
-    // end-to-end: the row reader sees exactly the undeleted suffix
-    val rr = new GraftRowReader(part, schema, Map.empty)
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
-    try while (rr.next()) ids += rr.get().getLong(0)
-    finally rr.close()
+    // end-to-end: the columnar reader serves exactly the undeleted suffix
+    val ids = readIds(part)
     assert(ids.length == n - g0rows - 1)
     assert(ids.head == g1start + 1 && ids.last == n - 1)
     assert(!ids.exists(_ < g1start + 1), "deleted positions must not surface")
@@ -91,29 +118,20 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(groups.length >= 2)
     // scatter deletes across groups (none fully deleted)
     val deleted = (0L until n by 7L).toSet
-    val dv = new Roaring64Bitmap()
-    deleted.foreach(dv.addLong)
-    val part = GraftInputPartition(file, n, DvCache.serialize(dv))
-    val rr = new GraftRowReader(part, schema, Map.empty)
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
-    try while (rr.next()) ids += rr.get().getLong(0)
-    finally rr.close()
-    assert(ids.toSet == (0L until n).toSet -- deleted)
+    val part = GraftInputPartition(file, n, DvCache.serialize(dvOf(deleted)))
+    val batches = readBatches(part)
+    assert(batches.map(_.ids).flatten.toSet == (0L until n).toSet -- deleted)
+    // names decode through the selection view too
+    assert(batches.forall(b => b.view && b.firstName == s"name-${b.ids.head}"))
   }
 
   test("DV-free files stream ColumnarBatches") {
     val n = 2500L
     val (file, _) = writeMultiGroupFile(n)
-    val part = GraftInputPartition(file, n, null)
-    val cr = new GraftColumnarReader(part, schema, Map.empty)
-    var rows = 0L
-    var batches = 0
-    try while (cr.next()) {
-      val b: ColumnarBatch = cr.get()
-      rows += b.numRows(); batches += 1
-    } finally cr.close()
-    assert(rows == n, "columnar path must deliver every live row")
-    assert(batches >= 1)
+    val batches = readBatches(GraftInputPartition(file, n, null))
+    assert(batches.map(_.ids).flatten == (0L until n),
+      "columnar path must deliver every live row")
+    assert(batches.nonEmpty)
   }
 
   test("byte-range splits partition the row groups exactly once") {
@@ -125,20 +143,12 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (file, groups) = writeMultiGroupFile(n)
     assert(groups.length >= 3)
     val fileLen = new java.io.File(file).length()
-    val dv = new Roaring64Bitmap()
-    (0L until n by 13L).foreach(dv.addLong) // scattered deletes
-    val blob = DvCache.serialize(dv)
+    val blob = DvCache.serialize(dvOf(0L until n by 13L)) // scattered deletes
     val halves = Seq(
       GraftInputPartition(file, n, blob, splitStart = 0L, splitEnd = fileLen / 2),
       GraftInputPartition(file, n, blob, splitStart = fileLen / 2,
         splitEnd = Long.MaxValue))
-    val perSplit = halves.map { p =>
-      val rr = new GraftRowReader(p, schema, Map.empty)
-      val ids = scala.collection.mutable.ArrayBuffer[Long]()
-      try while (rr.next()) ids += rr.get().getLong(0)
-      finally rr.close()
-      ids.toSeq
-    }
+    val perSplit = halves.map(readIds)
     assert(perSplit.forall(_.nonEmpty), "both splits must carry row groups")
     assert(perSplit.flatten.sorted ==
       (0L until n).filterNot(_ % 13 == 0).sorted,
@@ -148,11 +158,39 @@ class VectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reader cap stops early (pushed-limit partition cap)") {
     val n = 2000L
     val (file, _) = writeMultiGroupFile(n)
-    val part = GraftInputPartition(file, n, null, cap = 10L)
-    val rr = new GraftRowReader(part, schema, Map.empty)
-    var c = 0
-    try while (rr.next()) c += 1
-    finally rr.close()
-    assert(c == 10, s"cap=10 must stop the reader, got $c")
+    val capped = readBatches(GraftInputPartition(file, n, null, cap = 10L))
+    assert(capped.map(_.ids).flatten == (0L until 10L),
+      s"cap=10 must stop the reader, got ${capped.map(_.rows)}")
+    // under a DV the cap counts live rows
+    val dvCapped = readIds(GraftInputPartition(file, n,
+      DvCache.serialize(dvOf(0L until 20L by 2L)), cap = 10L))
+    assert(dvCapped == (1L until 20L by 2L))
+  }
+
+  test("DV positions straddling a 4096-row batch boundary map exactly") {
+    // one row group, so batches of 4096 split it at absolute 4096/8192
+    val n = 10000L
+    val (file, groups) = writeFile(n, None)
+    assert(groups.length == 1)
+    val deleted = (4090L to 4100L) ++ (8190L to 8193L)
+    val batches = readBatches(
+      GraftInputPartition(file, n, DvCache.serialize(dvOf(deleted))))
+    assert(batches.length == 3)
+    assert(batches.map(_.ids).flatten == (0L until n).filterNot(deleted.contains))
+  }
+
+  test("a wholly deleted batch is never emitted, a delete-free one passes unwrapped") {
+    val n = 10000L
+    val (file, _) = writeFile(n, None)
+    // batch 0: one delete; batch 1 (rows 4096-8191): all deleted;
+    // batch 2: no deletes
+    val deleted = 5L +: (4096L until 8192L)
+    val batches = readBatches(
+      GraftInputPartition(file, n, DvCache.serialize(dvOf(deleted))))
+    assert(batches.map(_.rows) == Seq(4095, 10000 - 8192),
+      "the fully deleted batch must not surface, not even with 0 rows")
+    assert(batches.map(_.ids).flatten == (0L until n).filterNot(deleted.contains))
+    assert(batches.head.view, "a partly deleted batch is a selection view")
+    assert(!batches(1).view, "a batch without deletes passes through as decoded")
   }
 }
